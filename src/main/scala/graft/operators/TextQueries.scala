@@ -1633,7 +1633,7 @@ object TextQueries extends QueryPack {
     * lineage (q146 trains 3 rounds — below `compactEvery`, so nothing
     * is truncated) — slower, never wrong.
     */
-  private val keptBpeState =
+  private[operators] val keptBpeState =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, org.apache.spark.rdd.RDD[_]]
 
   private def bpeTrainIncremental(docs: org.apache.spark.sql.DataFrame,
@@ -1749,6 +1749,10 @@ object TextQueries extends QueryPack {
           pc.values.removeIf(c => c <= 0L): Unit
         }
       }
+      // retire a kept state an earlier DISTRIBUTED needState run
+      // registered (see [[keptBpeState]]): this path keeps none itself
+      if (needState)
+        Option(keptBpeState.remove(spark)).foreach(_.unpersist(blocking = false))
       val stateDf =
         if (!needState || exhausted) baseDf.limit(0)
         else {

@@ -540,14 +540,6 @@ class Warehouse(val root: String, spark: SparkSession) {
                      name: String): Option[String] =
     readSmallFile(new Path(versionsDir(layer, table), s"v=$version/_graft_$name"))
 
-  /** Total bytes under the table dir — the whole-table compaction cost
-    * observable (one recursive summary call, no Spark job).
-    */
-  def tableBytes(layer: String, table: String): Long = {
-    val dir = new Path(path(layer, table))
-    if (!fs.exists(dir)) 0L else fs.getContentSummary(dir).getLength
-  }
-
   /** Bytes under ONE partition dir — the size signal the size-tiered
     * wave compaction ranks merge candidates by (one recursive summary
     * call per dir, no Spark job; 0 for a missing dir). Only probed on

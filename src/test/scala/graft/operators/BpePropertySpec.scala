@@ -142,4 +142,22 @@ class BpePropertySpec extends SparkSpec {
       } finally spark.conf.unset("graft.bpe.driverCorpusLimit")
     }
   }
+
+  test("a driver-path needState run retires the state a distributed run kept") {
+    val docs = Seq((0L, "a b c d a b"), (1L, "a b c"), (2L, "c d a b"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    spark.conf.set("graft.bpe.driverCorpusLimit", "0")
+    val kept =
+      try {
+        TextQueries.bpeTrain(docs, "text", "doc_id", 2).collect()
+        TextQueries.keptBpeState.get(spark)
+      } finally spark.conf.unset("graft.bpe.driverCorpusLimit")
+    assert(kept != null && sc.getPersistentRDDs.contains(kept.id),
+      "the distributed needState run must keep its final state persisted")
+    TextQueries.bpeTrain(docs, "text", "doc_id", 2).collect()
+    assert(!sc.getPersistentRDDs.contains(kept.id),
+      "the driver-path run left the distributed run's kept state persisted")
+    assert(TextQueries.keptBpeState.get(spark) == null)
+  }
 }

@@ -114,8 +114,11 @@ class OrchestratorSpec extends SparkSpec {
   // row count identical, (b) leave every fact partition file untouched,
   // and (c) cost measurably less wall-clock than the full pipeline —
   // the fact loaders reduce to one watermark probe + empty-slice
-  // short-circuit, and staging is skipped entirely. The sf0.1 headline
-  // numbers come from EtlTiming (same re-run, printed full-vs-noop).
+  // short-circuit. This re-run calls the 3NF and DM stages directly, so
+  // no staging load runs at all; a whole `runFullEtl` re-run skips its
+  // staging loads through the skip ledger instead (the cascade test
+  // below). The sf0.1 headline numbers come from EtlTiming (same
+  // re-run, printed full-vs-noop).
   test("no-op 3NF+DM re-run: counts identical, fact files untouched, measured cheaper") {
     val root = java.nio.file.Files.createTempDirectory("graft-wh-noop").toString
     val o = new Orchestrator(spark, sf, root)
@@ -395,6 +398,67 @@ class OrchestratorSpec extends SparkSpec {
     assert(o.wh.read("bl_dm", "dim_products_scd")
       .filter($"product_id" === 999777L).count() == 1,
       "re-versioned 3NF output must cascade into the re-run DM dim group")
+  }
+
+  test("runFullEtl on an unchanged extract skips every staging and dim group, rewriting nothing") {
+    import java.nio.file.{Files, Path}
+    // a copy of the extract whose part table is a DIRECTORY, so a new
+    // part file can land beside the original one
+    val ext = Files.createTempDirectory("graft-extract")
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+      .foreach { t =>
+        val src = Path.of(sf, s"$t.parquet")
+        if (t == "part") {
+          Files.createDirectories(ext.resolve("part.parquet"))
+          Files.copy(src, ext.resolve("part.parquet/part-00000.parquet"))
+        } else Files.copy(src, ext.resolve(s"$t.parquet"))
+      }
+    val root = Files.createTempDirectory("graft-wh-cascade").toString
+    val o = new Orchestrator(spark, ext.toString, root)
+    def tree = Seq("staging", "bl_3nf", "bl_dm").flatMap(l => partFilesAt(root, l, "")).toSet
+    def events(kind: String): Map[String, Long] = o.wh.read("bl_cl", "etl_log")
+      .filter($"message".startsWith(kind)).groupBy($"procedure").count()
+      .as[(String, Long)].collect().toMap
+    val stagingLoaders = Seq("customers", "products", "suppliers", "sales", "orders")
+      .map(t => s"load_staging_$t")
+
+    val full = o.runFullEtl()
+    val before = tree
+    assert(o.runFullEtl() == full)
+    val after = tree
+    val changed = (after -- before) ++ (before -- after)
+    assert(changed.isEmpty, s"a re-run on an unchanged extract changed ${changed.map(_._1)}")
+    assert(events("skipped") ==
+      (stagingLoaders ++ Seq("load_3nf_dims", "load_dm_dims", "load_dim_dates"))
+        .map(_ -> 1L).toMap)
+
+    // a new extract file holding a new product re-runs its staging load
+    // (only that one) and the product reaches the DM dimension
+    val newPart = Files.createTempDirectory("graft-new-part").resolve("p")
+    val part = Tables.part(spark, sf)
+    part.limit(1)
+      .withColumn("p_partkey", lit(999888L).cast(part.schema("p_partkey").dataType))
+      .coalesce(1).write.parquet(newPart.toString)
+    val newFile = Files.list(newPart).filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.move(newFile, ext.resolve("part.parquet/part-00001.parquet"))
+    val completedBefore = events("completed")
+    o.runFullEtl()
+    val completedAfter = events("completed")
+    assert(stagingLoaders.filter(p => completedAfter(p) > completedBefore(p)) ==
+      Seq("load_staging_products"))
+    assert(o.wh.read("bl_dm", "dim_products_scd")
+      .filter($"product_id" === 999888L).count() == 1,
+      "the new extract product must reach bl_dm.dim_products_scd")
+
+    // touching a staging output file re-runs its group: the skip is
+    // change detection, not a stale shortcut
+    val touched = Files.list(Path.of(root, "staging", "customers"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.setLastModifiedTime(touched, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(touched).toMillis + 1000))
+    o.runFullEtl()
+    assert(events("completed")("load_staging_customers") ==
+      completedAfter("load_staging_customers") + 1)
   }
 
   test("etl log captures one completed row per loader") {
